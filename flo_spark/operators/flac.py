@@ -23,9 +23,9 @@ contract):
   (frame) and STREAMINFO-MD5 verification — a corrupt stream raises
   instead of mis-decoding.
 
-Everything is stdlib + numpy; the encoder and decoder share the bit
-I/O and CRC tables so the round-trip entry and the unit tests
-exercise one implementation.
+Everything is stdlib + numpy; the encoder and decoder share the CRC
+tables and the MSB-first bit I/O of operators/bitio.py, so the
+round-trip entry and the unit tests exercise one implementation.
 """
 
 from __future__ import annotations
@@ -34,6 +34,8 @@ import hashlib
 import struct
 
 import numpy as np
+
+from flo_spark.operators.bitio import MsbReader, MsbWriter
 
 __all__ = ["encode_flac", "decode_flac", "decode_flac_full"]
 
@@ -69,75 +71,6 @@ def _crc16(data: bytes) -> int:
     return crc
 
 
-class _BitWriter:
-    def __init__(self):
-        self.buf = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, value: int, nbits: int) -> None:
-        if nbits == 0:
-            return
-        self.acc = (self.acc << nbits) | (value & ((1 << nbits) - 1))
-        self.nbits += nbits
-        while self.nbits >= 8:
-            self.nbits -= 8
-            self.buf.append((self.acc >> self.nbits) & 0xFF)
-        self.acc &= (1 << self.nbits) - 1
-
-    def write_unary(self, q: int) -> None:
-        while q >= 32:
-            self.write(0, 32)
-            q -= 32
-        self.write(1, q + 1)
-
-    def align(self) -> None:
-        if self.nbits:
-            self.write(0, 8 - self.nbits)
-
-    def getvalue(self) -> bytes:
-        assert self.nbits == 0, "unaligned bit stream"
-        return bytes(self.buf)
-
-
-class _BitReader:
-    def __init__(self, data: bytes, pos: int = 0):
-        self.data = data
-        self.byte = pos
-        self.bit = 0
-
-    def read(self, nbits: int) -> int:
-        out = 0
-        while nbits:
-            if self.byte >= len(self.data):
-                raise ValueError("truncated FLAC bit stream")
-            avail = 8 - self.bit
-            take = min(nbits, avail)
-            cur = self.data[self.byte]
-            out = (out << take) | ((cur >> (avail - take)) & ((1 << take) - 1))
-            self.bit += take
-            nbits -= take
-            if self.bit == 8:
-                self.bit = 0
-                self.byte += 1
-        return out
-
-    def read_unary(self) -> int:
-        q = 0
-        while self.read(1) == 0:
-            q += 1
-        return q
-
-    def read_signed(self, nbits: int) -> int:
-        v = self.read(nbits)
-        return v - (1 << nbits) if v >> (nbits - 1) else v
-
-    def align(self) -> None:
-        if self.bit:
-            self.bit = 0
-            self.byte += 1
-
-
 def _utf8_number(n: int) -> bytes:
     """FLAC's UTF-8-style coded number (frame index / sample number).
     An nbytes-long sequence carries (7 - nbytes) + 6*(nbytes - 1)
@@ -156,7 +89,7 @@ def _utf8_number(n: int) -> bytes:
     return bytes(out)
 
 
-def _read_utf8_number(br: _BitReader) -> int:
+def _read_utf8_number(br: MsbReader) -> int:
     first = br.read(8)
     if first < 0x80:
         return first
@@ -195,7 +128,7 @@ def _best_rice_param(u: np.ndarray) -> int:
     return best_k
 
 
-def _write_rice(bw: _BitWriter, res: np.ndarray, partition_order: int,
+def _write_rice(bw: MsbWriter, res: np.ndarray, partition_order: int,
                 blocksize: int, pred_order: int) -> None:
     """Residual coding method 0 (4-bit Rice parameters)."""
     bw.write(0, 2)  # method: RICE
@@ -251,7 +184,7 @@ def encode_flac(
     for f_idx, start in enumerate(range(0, n, block_size)):
         block = samples[start : start + block_size]
         bs = len(block)
-        bw = _BitWriter()
+        bw = MsbWriter()
         bw.write(_SYNC, 14)
         bw.write(0, 1)  # mandatory zero
         bw.write(0, 1)  # fixed-blocksize stream
@@ -270,11 +203,10 @@ def encode_flac(
         for ch in range(n_ch):
             x = block[:, ch].astype(np.int64)
             _encode_subframe(bw, x, bs, max_partition_order)
-        bw.align()
-        body = bytes(bw.buf)
+        body = bw.getvalue()
         frames += body + struct.pack(">H", _crc16(body))
 
-    si = _BitWriter()
+    si = MsbWriter()
     # spec: the min-blocksize field ignores a short LAST block, so a
     # fixed-blocksize stream reports the nominal size in both fields
     si.write(block_size, 16)
@@ -285,13 +217,12 @@ def encode_flac(
     si.write(n_ch - 1, 3)
     si.write(15, 5)  # bits per sample - 1
     si.write(n, 36)
-    si.align()
     streaminfo = si.getvalue() + md5
     header = b"fLaC" + bytes([0x80, 0, 0, len(streaminfo)]) + streaminfo
     return header + bytes(frames)
 
 
-def _encode_subframe(bw: _BitWriter, x: np.ndarray, bs: int,
+def _encode_subframe(bw: MsbWriter, x: np.ndarray, bs: int,
                      max_partition_order: int) -> None:
     bw.write(0, 1)  # zero padding bit
     if bs and np.all(x == x[0]):
@@ -373,7 +304,7 @@ def decode_flac_full(buf: bytes):
             break
     if streaminfo is None or len(streaminfo) < 34:
         raise ValueError("FLAC missing STREAMINFO")
-    si = _BitReader(streaminfo)
+    si = MsbReader(streaminfo)
     si.read(16)  # min blocksize
     si.read(16)  # max blocksize
     si.read(24)
@@ -387,7 +318,7 @@ def decode_flac_full(buf: bytes):
     chans = [[] for _ in range(n_ch)]
     got = 0
     while got < total:
-        br = _BitReader(buf, pos)
+        br = MsbReader(buf, pos)
         frame_start = pos
         if br.read(14) != _SYNC:
             raise ValueError("lost FLAC frame sync")
@@ -420,7 +351,7 @@ def decode_flac_full(buf: bytes):
         frame_bps = bps if sz_code == 0 else _SIZE_CODES.get(sz_code)
         if frame_bps is None:
             raise ValueError("reserved FLAC sample-size code")
-        header_len = br.byte - frame_start
+        header_len = (br.tell() >> 3) - frame_start
         if _crc8(buf[frame_start : frame_start + header_len]) != br.read(8):
             raise ValueError("FLAC frame header CRC-8 mismatch")
 
@@ -451,13 +382,13 @@ def decode_flac_full(buf: bytes):
         else:
             raise ValueError("reserved FLAC channel assignment")
         br.align()
-        frame_bytes = buf[frame_start : br.byte]
-        if br.byte + 2 > len(buf):
+        end = br.tell() >> 3
+        if end + 2 > len(buf):
             raise ValueError("truncated FLAC frame footer")
-        crc_footer = struct.unpack(">H", buf[br.byte : br.byte + 2])[0]
-        if _crc16(frame_bytes) != crc_footer:
+        crc_footer = struct.unpack(">H", buf[end : end + 2])[0]
+        if _crc16(buf[frame_start:end]) != crc_footer:
             raise ValueError("FLAC frame CRC-16 mismatch")
-        pos = br.byte + 2
+        pos = end + 2
         take = min(bs, total - got)
         for ch in range(n_ch):
             chans[ch].append(outs[ch][:take])
@@ -483,7 +414,7 @@ def decode_flac_full(buf: bytes):
     return out.astype(np.int32), rate, bps
 
 
-def _decode_subframe(br: _BitReader, bs: int, bps: int) -> np.ndarray:
+def _decode_subframe(br: MsbReader, bs: int, bps: int) -> np.ndarray:
     if br.read(1):
         raise ValueError("invalid FLAC subframe padding bit")
     stype = br.read(6)
@@ -537,7 +468,7 @@ def _undiff(warm: np.ndarray, res: np.ndarray, order: int, bs: int) -> np.ndarra
     return cur[:bs]
 
 
-def _read_residual(br: _BitReader, bs: int, order: int) -> np.ndarray:
+def _read_residual(br: MsbReader, bs: int, order: int) -> np.ndarray:
     method = br.read(2)
     if method not in (0, 1):
         raise ValueError("reserved FLAC residual coding method")

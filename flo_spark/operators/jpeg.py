@@ -33,6 +33,13 @@ import struct
 
 import numpy as np
 
+from flo_spark.operators.bitio import (
+    MsbReader,
+    MsbWriter,
+    PrefixDecoder,
+    canonical_codes,
+)
+
 __all__ = ["encode_jpeg_baseline", "decode_jpeg"]
 
 #: zigzag scan order: index = zigzag position, value = row*8 + col
@@ -135,104 +142,23 @@ def _quality_scale(base: np.ndarray, quality: int) -> np.ndarray:
     return np.clip(q, 1, 255)
 
 
-def _build_huff_codes(bits, vals):
-    """Canonical Huffman (T.81 Annex C): {symbol: (code, length)}."""
-    out, code = {}, 0
-    idx = 0
-    for length in range(1, 17):
-        for _ in range(bits[length - 1]):
-            out[vals[idx]] = (code, length)
-            code += 1
-            idx += 1
-        code <<= 1
-    return out
+def _entropy_bytes(bw: MsbWriter) -> bytes:
+    """Close an entropy-coded segment: pad to a byte boundary with
+    1-bits and stuff 0x00 after every 0xFF byte (T.81 F.1.2.3)."""
+    bw.write(0x7F, -bw.nbits % 8)
+    return bw.getvalue().replace(b"\xff", b"\xff\x00")
 
 
-def _build_huff_decoder(bits, vals):
-    """{(code, length): symbol} for MSB-first sequential decode."""
-    enc = _build_huff_codes(bits, vals)
-    return {(c, ln): sym for sym, (c, ln) in enc.items()}
-
-
-class _JBitWriter:
-    """MSB-first bit writer with JPEG byte stuffing (0xFF -> 0xFF 0x00)."""
-
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.n = 0
-
-    def write(self, code: int, length: int) -> None:
-        for i in range(length - 1, -1, -1):
-            self.acc = (self.acc << 1) | ((code >> i) & 1)
-            self.n += 1
-            if self.n == 8:
-                b = self.acc
-                self.out.append(b)
-                if b == 0xFF:
-                    self.out.append(0x00)
-                self.acc = self.n = 0
-
-    def pad_to_byte(self) -> None:
-        while self.n:
-            self.write(1, 1)  # pad with 1-bits per spec
-
-
-class _JBitReader:
-    """MSB-first bit reader over entropy-coded data; un-stuffs
-    0xFF 0x00 and stops (raising _Marker) at real markers."""
-
-    class Marker(Exception):
-        def __init__(self, marker: int):
-            self.marker = marker
-
-    def __init__(self, data: bytes, pos: int):
-        self.data = data
-        self.pos = pos
-        self.acc = 0
-        self.n = 0
-
-    def _next_byte(self) -> int:
-        if self.pos >= len(self.data):
-            raise ValueError("truncated JPEG entropy data")
-        b = self.data[self.pos]
-        self.pos += 1
-        if b == 0xFF:
-            if self.pos >= len(self.data):
-                raise ValueError("truncated JPEG marker")
-            m = self.data[self.pos]
-            self.pos += 1
-            if m == 0x00:
-                return 0xFF  # stuffed
-            raise _JBitReader.Marker(0xFF00 | m)
-        return b
-
-    def read_bit(self) -> int:
-        if self.n == 0:
-            self.acc = self._next_byte()
-            self.n = 8
-        self.n -= 1
-        return (self.acc >> self.n) & 1
-
-    def read_bits(self, count: int) -> int:
-        v = 0
-        for _ in range(count):
-            v = (v << 1) | self.read_bit()
-        return v
-
-    def byte_align(self) -> None:
-        self.n = 0
-
-
-def _huff_decode(br: _JBitReader, table: dict) -> int:
-    code, length = 0, 0
-    while length < 17:
-        code = (code << 1) | br.read_bit()
-        length += 1
-        sym = table.get((code, length))
-        if sym is not None:
-            return sym
-    raise ValueError("invalid JPEG Huffman code")
+def _entropy_segment(buf: bytes, pos: int) -> tuple[bytes, int]:
+    """The entropy-coded bytes from ``pos`` up to the next marker with
+    the stuffing removed, and the marker's offset (``len(buf)`` when
+    no marker follows)."""
+    end = buf.find(b"\xff", pos)
+    while end >= 0 and buf[end + 1 : end + 2] == b"\x00":
+        end = buf.find(b"\xff", end + 2)
+    if end < 0:
+        end = len(buf)
+    return buf[pos:end].replace(b"\xff\x00", b"\xff"), end
 
 
 def _extend(v: int, s: int) -> int:
@@ -372,10 +298,10 @@ def encode_jpeg_baseline(
         out += bytes([i + 1, (dcsel << 4) | dcsel])
     out += bytes([0, 63, 0])
 
-    dc_lum = _build_huff_codes(*_DC_LUM)
-    ac_lum = _build_huff_codes(*_AC_LUM)
-    dc_chrom = _build_huff_codes(*_DC_CHROM)
-    ac_chrom = _build_huff_codes(*_AC_CHROM)
+    dc_lum = canonical_codes(*_DC_LUM)
+    ac_lum = canonical_codes(*_AC_LUM)
+    dc_chrom = canonical_codes(*_DC_CHROM)
+    ac_chrom = canonical_codes(*_AC_CHROM)
     comp_tabs = []
     for i in range(nc):
         if i == 0:
@@ -383,15 +309,15 @@ def encode_jpeg_baseline(
         else:
             comp_tabs.append((qchrom, dc_chrom, ac_chrom))
 
-    bw = _JBitWriter()
+    bw = MsbWriter()
     preds = [0] * nc
     rst = 0
     n_mcu = 0
     for my in range(mcus_y):
         for mx in range(mcus_x):
             if restart_interval and n_mcu and n_mcu % restart_interval == 0:
-                bw.pad_to_byte()
-                bw.out += bytes([0xFF, 0xD0 + rst])
+                out += _entropy_bytes(bw) + bytes([0xFF, 0xD0 + rst])
+                bw = MsbWriter()
                 rst = (rst + 1) & 7
                 preds = [0] * nc
             for i in range(nc):
@@ -406,8 +332,7 @@ def encode_jpeg_baseline(
                             bw, block, qtab, dcc, acc_, preds[i]
                         )
             n_mcu += 1
-    bw.pad_to_byte()
-    out += bw.out
+    out += _entropy_bytes(bw)
     out += b"\xff\xd9"  # EOI
     return bytes(out)
 
@@ -423,8 +348,8 @@ def decode_jpeg(buf: bytes) -> np.ndarray:
         raise ValueError("not a JPEG payload")
     pos = 2
     qtabs: dict[int, np.ndarray] = {}
-    dc_tabs: dict[int, dict] = {}
-    ac_tabs: dict[int, dict] = {}
+    dc_tabs: dict[int, PrefixDecoder] = {}
+    ac_tabs: dict[int, PrefixDecoder] = {}
     frame = None
     restart_interval = 0
     while pos + 4 <= len(buf):
@@ -464,7 +389,7 @@ def decode_jpeg(buf: bytes) -> np.ndarray:
                 vals = list(body[bp + 17 : bp + 17 + nvals])
                 if len(bits) < 16 or len(vals) < nvals:
                     raise ValueError("truncated JPEG DHT segment")
-                table = _build_huff_decoder(bits, vals)
+                table = PrefixDecoder(bits, vals)
                 (dc_tabs if tc == 0 else ac_tabs)[th] = table
                 bp += 17 + nvals
         elif marker == 0xC0 or marker == 0xC1:  # baseline / ext sequential
@@ -491,7 +416,7 @@ def decode_jpeg(buf: bytes) -> np.ndarray:
             ns = body[0]
             if ns != len(frame["comps"]):
                 # per-component (non-interleaved) scans need multi-scan
-                # assembly — refuse via the codec-lib fallback contract
+                # assembly, which this decoder does not do
                 raise NotImplementedError(
                     "multi-scan (non-interleaved) baseline JPEG"
                 )
@@ -525,59 +450,52 @@ def _decode_scan(buf, pos, frame, scan_sel, qtabs, dc_tabs, ac_tabs,
             np.zeros((mcus_y * 8 * c["v"], mcus_x * 8 * c["h"]),
                      dtype=np.float64)
         )
-    br = _JBitReader(buf, pos)
+    seg, end = _entropy_segment(buf, pos)
+    br = MsbReader(seg)
     preds = [0] * len(comps)
     n_mcu = 0
     total_mcus = mcus_x * mcus_y
     while n_mcu < total_mcus:
         if restart_interval and n_mcu and n_mcu % restart_interval == 0:
-            br.byte_align()
-            # expect RSTn
-            if buf[br.pos] == 0xFF and 0xD0 <= buf[br.pos + 1] <= 0xD7:
-                br.pos += 2
-                preds = [0] * len(comps)
-            else:
+            # the interval's whole bytes are used up and RSTn follows
+            rst = buf[end : end + 2]
+            if br.left() >= 8 or len(rst) < 2 or not 0xD0 <= rst[1] <= 0xD7:
                 raise ValueError("missing JPEG restart marker")
+            seg, end = _entropy_segment(buf, end + 2)
+            br = MsbReader(seg)
+            preds = [0] * len(comps)
         my, mx = divmod(n_mcu, mcus_x)
-        try:
-            for i, c in enumerate(comps):
-                dct, act = scan_sel[c["id"]]
-                dc_table = dc_tabs[dct]
-                ac_table = ac_tabs[act]
-                qtab = qtabs[c["tq"]]
-                for by in range(c["v"]):
-                    for bx in range(c["h"]):
-                        coef = np.zeros(64, dtype=np.int64)
-                        s = _huff_decode(br, dc_table)
-                        diff = _extend(br.read_bits(s), s) if s else 0
-                        preds[i] += diff
-                        coef[0] = preds[i]
-                        k = 1
-                        while k < 64:
-                            rs = _huff_decode(br, ac_table)
-                            r, s = rs >> 4, rs & 0x0F
-                            if s == 0:
-                                if r == 15:  # ZRL
-                                    k += 16
-                                    continue
-                                break  # EOB
-                            k += r
-                            if k > 63:
-                                raise ValueError("JPEG AC index overflow")
-                            coef[k] = _extend(br.read_bits(s), s)
-                            k += 1
-                        block = np.zeros(64, dtype=np.float64)
-                        block[_ZIGZAG] = coef * qtab[_ZIGZAG]
-                        pix = (
-                            _DCT_A.T @ block.reshape(8, 8) @ _DCT_A
-                        ) + 128.0
-                        y0 = (my * c["v"] + by) * 8
-                        x0 = (mx * c["h"] + bx) * 8
-                        planes[i][y0 : y0 + 8, x0 : x0 + 8] = pix
-        except _JBitReader.Marker as exc:
-            raise ValueError(
-                f"unexpected marker 0x{exc.marker:04X} inside JPEG scan"
-            ) from exc
+        for i, c in enumerate(comps):
+            dct, act = scan_sel[c["id"]]
+            dc_table = dc_tabs[dct]
+            ac_table = ac_tabs[act]
+            qtab = qtabs[c["tq"]]
+            for by in range(c["v"]):
+                for bx in range(c["h"]):
+                    coef = np.zeros(64, dtype=np.int64)
+                    s = dc_table.read(br)
+                    preds[i] += _extend(br.read(s), s)
+                    coef[0] = preds[i]
+                    k = 1
+                    while k < 64:
+                        rs = ac_table.read(br)
+                        r, s = rs >> 4, rs & 0x0F
+                        if s == 0:
+                            if r == 15:  # ZRL
+                                k += 16
+                                continue
+                            break  # EOB
+                        k += r
+                        if k > 63:
+                            raise ValueError("JPEG AC index overflow")
+                        coef[k] = _extend(br.read(s), s)
+                        k += 1
+                    block = np.zeros(64, dtype=np.float64)
+                    block[_ZIGZAG] = coef * qtab[_ZIGZAG]
+                    pix = (_DCT_A.T @ block.reshape(8, 8) @ _DCT_A) + 128.0
+                    y0 = (my * c["v"] + by) * 8
+                    x0 = (mx * c["h"] + bx) * 8
+                    planes[i][y0 : y0 + 8, x0 : x0 + 8] = pix
         n_mcu += 1
 
     # upsample every component to full MCU-grid resolution, then crop

@@ -13,9 +13,11 @@ FLAC — the lossless codec in operators/flac.py; binary PPM/PGM incl.
 PNG — non-interlaced AND Adam7-interlaced — via ``zlib`` + the five
 scanline filters; baseline + LZW TIFF; GIF; baseline JPEG — the
 from-spec codec in operators/jpeg.py) — tested end-to-end through
-mapInPandas.  Variants still needing codec libraries NOT in this
-container (progressive JPEG, 12-bit precision, ...) sit behind
-guarded PIL/soundfile imports and raise NotImplementedError here;
+mapInPandas.  The codecs share one bit-I/O, prefix-code and LZW layer
+(operators/bitio.py), and ``decode_image`` / ``decode_audio`` /
+``decode_video`` dispatch through one table of magic tests.  Formats
+and variants with no native decoder (progressive JPEG, 12-bit
+precision, compressed video, ...) raise NotImplementedError;
 ``extract_features``'s default hash features stay decoder-free so the
 oracle-checked catalog entries are deterministic everywhere.
 """
@@ -30,6 +32,16 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from flo_spark.operators.bitio import (
+    LsbReader,
+    LsbWriter,
+    MsbReader,
+    lzw_decode,
+    lzw_encode,
+)
+from flo_spark.operators.jpeg import decode_jpeg
+from flo_spark.operators.webp import decode_webp
 
 #: metadata struct carried alongside every binary asset column
 ASSET_META_SCHEMA = T.StructType(
@@ -49,18 +61,6 @@ FEATURE_SCHEMA = T.StructType(
         T.StructField("feature", T.ArrayType(T.FloatType())),
     ]
 )
-
-
-def _fake_decode(payload: bytes, feat_dim: int = 8) -> list[float]:
-    """STUB decode: deterministic pseudo-features from a content hash.
-
-    Replace with a real decoder (PIL image -> resize -> pixel stats,
-    librosa frame-sample, ...) when the codec libraries are available.
-    """
-    if payload is None:
-        return [0.0] * feat_dim
-    digest = hashlib.sha256(payload).digest()
-    return [b / 255.0 for b in digest[:feat_dim]]
 
 
 def extract_features(
@@ -316,14 +316,22 @@ def _decode_png(payload: bytes):
     return out
 
 
+#: TIFF LZW widens its codes one code EARLIER than GIF ("early
+#: change").  The decoder's table is one entry BEHIND the encoder's (the
+#: first code after CLEAR creates none), so it widens at 2^size - 2 —
+#: libtiff's maxcode-1 convention — to stay in step with an encoder
+#: that widens at 2^size - 1.
+_TIFF_LZW_EARLY_CHANGE = 2
+
+
 def _decode_tiff(payload: bytes):
     """Baseline uncompressed TIFF, both byte orders: walk the first
     IFD, read the geometry/layout tags (width, length, bits, samples,
     strip offsets/counts, rows-per-strip), concatenate the strips, and
     reshape to (H, W, C) uint8.  Types SHORT and LONG, inline or
-    offset-stored values; compression must be 1 (none) — LZW/JPEG
-    variants raise and fall through to the guarded PIL path upstream
-    in deployments that carry codec libraries."""
+    offset-stored values; compression 1 (none) or 5 (LZW, optionally
+    with the horizontal-differencing predictor) — other compressions
+    raise NotImplementedError."""
     import struct
 
     import numpy as np
@@ -365,8 +373,10 @@ def _decode_tiff(payload: bytes):
     if any(b != 8 for b in bits):
         raise NotImplementedError(f"unsupported TIFF bit depths {bits}")
     if compression == 5:
+        # TIFF LZW (spec section 13): MSB-first codes over 8-bit
+        # symbols, CLEAR=256, EOI=257
         data = b"".join(
-            _lzw_decode_tiff(payload[o : o + n])
+            lzw_decode(MsbReader(payload[o : o + n]), 8, _TIFF_LZW_EARLY_CHANGE)
             for o, n in zip(strip_offs, strip_lens)
         )
     else:
@@ -445,78 +455,10 @@ def encode_tiff_baseline(
     return header + b"".join(strips) + ifd + overflow
 
 
-def decode_image(payload: bytes):
-    """Decode an image payload to an (H, W, C) uint8 numpy array.
-
-    Stdlib-decodable formats (binary PPM/PGM, 24-bit BI_RGB BMP,
-    8-bit PNG incl. Adam7 via zlib) decode here with stdlib +
-    numpy — a REAL decode, no codec library needed.  Everything else
-    uses PIL when available (guarded optional import — deployments
-    with codec libraries get the full decoder transparently) and
-    raises NotImplementedError where it isn't."""
-    native_miss: NotImplementedError | None = None
-    try:
-        if payload[:2] in (b"P6", b"P5"):
-            return _decode_ppm(bytes(payload))
-        if payload[:2] == b"BM":
-            return _decode_bmp(bytes(payload))
-        if bytes(payload[:8]) == _PNG_SIG:
-            return _decode_png(bytes(payload))
-        if bytes(payload[:4]) in (b"II*\x00", b"MM\x00*"):
-            return _decode_tiff(bytes(payload))
-        if bytes(payload[:6]) in (b"GIF87a", b"GIF89a"):
-            return _decode_gif(bytes(payload))
-        if bytes(payload[:4]) == b"qoif":
-            return _decode_qoi(bytes(payload))
-        if bytes(payload[:2]) == b"\xff\xd8":
-            from flo_spark.operators.jpeg import decode_jpeg
-
-            return decode_jpeg(bytes(payload))
-        if bytes(payload[:4]) == b"\x00\x00\x01\x00":
-            return _decode_ico(bytes(payload))
-        if bytes(payload[:4]) == b"RIFF" and bytes(payload[8:12]) == b"WEBP":
-            from flo_spark.operators.webp import decode_webp
-
-            return decode_webp(bytes(payload))
-        if bytes(payload[:4]) == b"\x59\xa6\x6a\x95":
-            return _decode_ras(bytes(payload))
-        if payload[0] == 0x0A and payload[2] == 1 and payload[3] in (
-            1, 2, 4, 8,
-        ):
-            return _decode_pcx(bytes(payload))
-        if bytes(payload[-18:]) == _TGA_FOOTER_SIG:
-            # TGA has no leading magic; the 2.0 footer is its only
-            # reliable signature (encode_tga always writes it)
-            return _decode_tga(bytes(payload))
-    except NotImplementedError as exc:
-        # a container we sniff but whose variant needs a codec library
-        # (e.g. LZW TIFF) must still reach the PIL path when present —
-        # the fallback contract this docstring promises
-        native_miss = exc
-    try:
-        import io
-
-        from PIL import Image  # type: ignore[import-not-found]
-    except ImportError as exc:  # pragma: no cover - no PIL in container
-        raise (
-            native_miss
-            or NotImplementedError(
-                "compressed-image decode requires PIL, not present in this "
-                "container; PPM/PGM/BMP/PNG/TIFF payloads decode natively "
-                "above"
-            )
-        ) from exc
-    import numpy as np
-
-    with Image.open(io.BytesIO(payload)) as img:  # pragma: no cover
-        return np.asarray(img.convert("RGB"))
-
-
 def _decode_wav(payload: bytes):
     """PCM WAV via the stdlib ``wave`` module + numpy: 8/16/32-bit int
-    samples de-interleaved to (frames, channels).  Widths the native
-    path can't handle (e.g. 24-bit) raise NotImplementedError so the
-    caller's soundfile fallback gets its chance."""
+    samples de-interleaved to (frames, channels).  Other widths (e.g.
+    24-bit) raise NotImplementedError."""
     import io
     import wave
 
@@ -540,45 +482,6 @@ def _decode_wav(payload: bytes):
     else:
         raise NotImplementedError(f"unsupported WAV sample width {width}")
     return samples.reshape(-1, n_ch), rate
-
-
-def decode_audio(payload: bytes):
-    """Decode an audio payload to (samples: float32 ndarray in [-1, 1],
-    rate: int).
-
-    PCM WAV decodes here via the stdlib ``wave`` module + numpy — a
-    REAL decode (8/16/32-bit int and channel de-interleave to
-    (frames, channels)).  Compressed formats use soundfile when
-    available (guarded optional import) and raise NotImplementedError
-    where it isn't."""
-    import io
-
-    native_miss: NotImplementedError | None = None
-    try:
-        if bytes(payload[:4]) == b"RIFF" and bytes(payload[8:12]) == b"WAVE":
-            return _decode_wav(bytes(payload))
-        if bytes(payload[:4]) == b".snd":
-            return _decode_au(bytes(payload))
-        if bytes(payload[:4]) == b"FORM" and bytes(payload[8:12]) == b"AIFF":
-            return _decode_aiff(bytes(payload))
-        if bytes(payload[:4]) == b"fLaC":
-            return _decode_flac_norm(bytes(payload))
-    except NotImplementedError as exc:
-        # A-law AU, 24-bit AIFF, etc. must still reach soundfile when
-        # the deployment carries it — the documented fallback contract
-        native_miss = exc
-    try:
-        import soundfile  # type: ignore[import-not-found]
-    except ImportError as exc:  # pragma: no cover - not in container
-        raise (
-            native_miss
-            or NotImplementedError(
-                "compressed-audio decode requires soundfile, not present in "
-                "this container; PCM WAV/AU/AIFF payloads decode natively "
-                "above"
-            )
-        ) from exc
-    return soundfile.read(io.BytesIO(payload))  # pragma: no cover
 
 
 #: G.711 mu-law segment decode table construction is pure arithmetic, so
@@ -822,54 +725,83 @@ def resize_images(
     return assets.mapInPandas(_batches, schema=out_schema)
 
 
-def _lzw_decode(data: bytes, min_code_size: int) -> list[int]:
-    """GIF-variant LZW (LSB-first bit packing, dynamic code width
-    3..12 bits, CLEAR/END control codes) — implemented from the GIF89a
-    spec appendix, no codec library."""
-    clear = 1 << min_code_size
-    end = clear + 1
+def _gif_color_table(b: bytes, pos: int, flags: int):
+    """The color table a GIF flags byte announces at ``pos`` (None
+    when absent) and the offset after it."""
+    import numpy as np
 
-    def fresh_dict():
-        return {i: (i,) for i in range(clear)}
+    if not flags & 0x80:
+        return None, pos
+    n = 3 * (2 << (flags & 0x07))
+    return np.frombuffer(b, np.uint8, n, pos).reshape(-1, 3), pos + n
 
-    table = fresh_dict()
-    code_size = min_code_size + 1
-    next_code = end + 1
-    out: list[int] = []
-    prev: tuple[int, ...] | None = None
-    acc = nbits = 0
-    for byte in data:
-        acc |= byte << nbits
-        nbits += 8
-        while nbits >= code_size:
-            code = acc & ((1 << code_size) - 1)
-            acc >>= code_size
-            nbits -= code_size
-            if code == clear:
-                table = fresh_dict()
-                code_size = min_code_size + 1
-                next_code = end + 1
-                prev = None
-                continue
-            if code == end:
-                return out
-            if prev is None:
-                entry = table[code]
-            elif code in table:
-                entry = table[code]
-                table[next_code] = prev + (entry[0],)
-                next_code += 1
-            elif code == next_code:
-                entry = prev + (prev[0],)  # the KwKwK case
-                table[next_code] = entry
-                next_code += 1
+
+def _gif_sub_blocks(b: bytes, pos: int):
+    """The data sub-blocks starting at ``pos`` and the offset after
+    their zero-length terminator."""
+    subs = []
+    while b[pos]:
+        subs.append(b[pos + 1 : pos + 1 + b[pos]])
+        pos += 1 + b[pos]
+    return subs, pos + 1
+
+
+def _gif_blocks(b: bytes):
+    """Parse a GIF87a/89a stream into (screen width, screen height,
+    background index, global color table, blocks).  ``blocks`` yields
+    ``(0x21, (label, sub_blocks))`` per extension and ``(0x2C, (left,
+    top, indices, color_table))`` per image, where ``indices`` is the
+    (h, w) uint8 array after from-spec LZW decode and the optional
+    4-pass interlace reorder."""
+    import struct
+
+    import numpy as np
+
+    if b[:6] not in (b"GIF87a", b"GIF89a"):
+        raise ValueError("not a GIF")
+    sw, sh, flags, bg, _aspect = struct.unpack_from("<HHBBB", b, 6)
+    gct, pos = _gif_color_table(b, 13, flags)
+
+    def blocks(pos):
+        while pos < len(b):
+            block = b[pos]
+            if block == 0x21:
+                label = b[pos + 1]
+                subs, pos = _gif_sub_blocks(b, pos + 2)
+                yield block, (label, subs)
+            elif block == 0x2C:
+                lx, ty, w, h, iflags = struct.unpack_from("<HHHHB", b, pos + 1)
+                local, pos = _gif_color_table(b, pos + 10, iflags)
+                table = gct if local is None else local
+                if table is None:
+                    raise ValueError("GIF image without a color table")
+                min_code = b[pos]
+                if not 2 <= min_code <= 8:
+                    # spec bounds; a corrupt byte would otherwise allocate
+                    # a 2^min_code literal table (hang/OOM on 40 or 255)
+                    raise ValueError(f"invalid GIF LZW code size {min_code}")
+                subs, pos = _gif_sub_blocks(b, pos + 1)
+                idx = lzw_decode(LsbReader(b"".join(subs)), min_code, 0)
+                if len(idx) < w * h:
+                    raise ValueError("GIF pixel data truncated")
+                arr = np.frombuffer(idx, np.uint8, w * h).reshape(h, w)
+                if iflags & 0x40:  # 4-pass interlace row order
+                    order = (
+                        list(range(0, h, 8))
+                        + list(range(4, h, 8))
+                        + list(range(2, h, 4))
+                        + list(range(1, h, 2))
+                    )
+                    deinter = np.empty_like(arr)
+                    deinter[order] = arr
+                    arr = deinter
+                yield block, (lx, ty, arr, table)
+            elif block == 0x3B:  # trailer
+                return
             else:
-                raise ValueError(f"corrupt LZW stream: code {code}")
-            out.extend(entry)
-            prev = entry
-            if next_code == (1 << code_size) and code_size < 12:
-                code_size += 1
-    return out
+                raise ValueError(f"unknown GIF block 0x{block:02x}")
+
+    return sw, sh, bg, gct, blocks(pos)
 
 
 def _decode_gif(payload: bytes):
@@ -877,185 +809,56 @@ def _decode_gif(payload: bytes):
     descriptor, global/local color tables, extension-block skipping,
     sub-block reassembly, from-spec LZW decode, optional 4-pass
     interlace reorder."""
+    *_, blocks = _gif_blocks(payload)
+    for block, body in blocks:
+        if block == 0x2C:
+            _lx, _ty, arr, table = body
+            return table[arr]
+    raise ValueError("GIF contains no image data")
+
+
+def _gif_header(w: int, h: int, palette):
+    """GIF89a header, logical screen descriptor and global color table
+    (padded to a power of two) -> (bytes so far, LZW minimum code
+    size)."""
     import struct
 
-    import numpy as np
+    n = len(palette)
+    depth = max(2, (n - 1).bit_length())
+    out = bytearray(b"GIF89a")
+    out += struct.pack("<HHBBB", w, h, 0x80 | (depth - 1), 0, 0)
+    for rgb in list(palette) + [(0, 0, 0)] * ((1 << depth) - n):
+        out += bytes(rgb)
+    return out, depth
 
-    if payload[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError("not a GIF")
-    sw, sh, flags, _bg, _aspect = struct.unpack_from("<HHBBB", payload, 6)
-    pos = 13
-    gct = None
-    if flags & 0x80:
-        n = 3 * (2 << (flags & 0x07))
-        gct = np.frombuffer(payload, np.uint8, n, pos).reshape(-1, 3)
-        pos += n
-    while pos < len(payload):
-        block = payload[pos]
-        pos += 1
-        if block == 0x21:  # extension: label + sub-blocks, skip
-            pos += 1
-            while payload[pos]:
-                pos += 1 + payload[pos]
-            pos += 1
-        elif block == 0x2C:  # image descriptor
-            _lx, _ty, w, h, iflags = struct.unpack_from("<HHHHB", payload, pos)
-            pos += 9
-            table = gct
-            if iflags & 0x80:
-                n = 3 * (2 << (iflags & 0x07))
-                table = np.frombuffer(payload, np.uint8, n, pos).reshape(-1, 3)
-                pos += n
-            if table is None:
-                raise ValueError("GIF image without a color table")
-            min_code = payload[pos]
-            pos += 1
-            if not 2 <= min_code <= 8:
-                # spec bounds; a corrupt byte would otherwise allocate
-                # a 2^min_code literal table (hang/OOM on 40 or 255)
-                raise ValueError(f"invalid GIF LZW code size {min_code}")
-            chunks = []
-            while payload[pos]:
-                ln = payload[pos]
-                chunks.append(payload[pos + 1 : pos + 1 + ln])
-                pos += 1 + ln
-            pos += 1
-            idx = _lzw_decode(b"".join(chunks), min_code)
-            if len(idx) < w * h:
-                raise ValueError("GIF pixel data truncated")
-            arr = np.asarray(idx[: w * h], dtype=np.int64).reshape(h, w)
-            if iflags & 0x40:  # 4-pass interlace row order
-                order = (
-                    list(range(0, h, 8))
-                    + list(range(4, h, 8))
-                    + list(range(2, h, 4))
-                    + list(range(1, h, 2))
-                )
-                deinter = np.empty_like(arr)
-                deinter[order] = arr
-                arr = deinter
-            return table[arr].astype(np.uint8)
-        elif block == 0x3B:  # trailer
-            break
-        else:
-            raise ValueError(f"unknown GIF block 0x{block:02x}")
-    raise ValueError("GIF contains no image data")
+
+def _gif_image(out: bytearray, indices, depth: int) -> None:
+    """Append a full-screen image block: descriptor, LZW minimum code
+    size, the LZW data in 255-byte sub-blocks, and the terminator."""
+    import struct
+
+    h, w = indices.shape
+    out += b"\x2c" + struct.pack("<HHHHB", 0, 0, w, h, 0)
+    out += bytes([depth])
+    bw = LsbWriter()
+    lzw_encode(bw, indices.reshape(-1).tolist(), depth)
+    data = bw.getvalue()
+    for i in range(0, len(data), 255):
+        chunk = data[i : i + 255]
+        out += bytes([len(chunk)]) + chunk
+    out += b"\x00"
 
 
 def encode_gif(img, palette) -> bytes:
     """Assemble a single-frame GIF89a from an (H, W) index array and an
-    RGB palette, with a greedy longest-match LZW encoder — the shared
-    encoder behind the hash-checked round-trip entry and the decoder
-    tests (which additionally cross-check against a dictionary-free
-    clear-heavy encoding)."""
-    import struct
-
+    RGB palette, with the greedy longest-match LZW encoder of
+    operators/bitio.py — the encoder behind the hash-checked
+    round-trip entry and the decoder tests (which additionally
+    cross-check against a dictionary-free clear-heavy encoding)."""
     h, w = img.shape
-    n = len(palette)
-    depth = max(2, (n - 1).bit_length())
-    clear, end = 1 << depth, (1 << depth) + 1
-    table = {(i,): i for i in range(clear)}
-    next_code, size = end + 1, depth + 1
-    acc = nbits = 0
-    data = bytearray()
-
-    def put(code, sz):
-        nonlocal acc, nbits
-        acc |= code << nbits
-        nbits += sz
-        while nbits >= 8:
-            data.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-
-    put(clear, size)
-    buf = ()
-    for px in (int(v) for v in img.reshape(-1)):
-        cand = buf + (px,)
-        if cand in table:
-            buf = cand
-            continue
-        put(table[buf], size)
-        table[cand] = next_code
-        next_code += 1
-        if next_code - 1 == (1 << size):
-            if size < 12:
-                size += 1
-            else:  # 12-bit table full: CLEAR and start over (spec rule)
-                put(clear, size)
-                table = {(i,): i for i in range(clear)}
-                next_code, size = end + 1, depth + 1
-        buf = (px,)
-    if buf:
-        put(table[buf], size)
-    put(end, size)
-    if nbits:
-        data.append(acc & 0xFF)
-
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HHBBB", w, h, 0x80 | (depth - 1), 0, 0)
-    full = list(palette) + [(0, 0, 0)] * ((1 << depth) - n)
-    for rgb in full:
-        out += bytes(rgb)
-    out += b"\x2c" + struct.pack("<HHHHB", 0, 0, w, h, 0)
-    out += bytes([depth])
-    for i in range(0, len(data), 255):
-        chunk = data[i : i + 255]
-        out += bytes([len(chunk)]) + bytes(chunk)
-    out += b"\x00\x3b"
-    return bytes(out)
-
-
-def _lzw_decode_tiff(data: bytes) -> bytes:
-    """TIFF-variant LZW (spec section 13): MSB-first bit packing,
-    8-bit symbols, CLEAR=256/EOI=257, and the 'early change' rule —
-    the code width grows one code EARLIER than in GIF (at next_code ==
-    2^size - 1)."""
-    CLEAR, EOI = 256, 257
-
-    def fresh():
-        return {i: bytes([i]) for i in range(256)}
-
-    table = fresh()
-    size, next_code = 9, EOI + 1
-    out = bytearray()
-    prev: bytes | None = None
-    acc = nbits = 0
-    for byte in data:
-        acc = (acc << 8) | byte
-        nbits += 8
-        while nbits >= size:
-            code = (acc >> (nbits - size)) & ((1 << size) - 1)
-            nbits -= size
-            acc &= (1 << nbits) - 1
-            if code == CLEAR:
-                table = fresh()
-                size, next_code = 9, EOI + 1
-                prev = None
-                continue
-            if code == EOI:
-                return bytes(out)
-            if prev is None:
-                entry = table[code]
-            elif code in table:
-                entry = table[code]
-                table[next_code] = prev + entry[:1]
-                next_code += 1
-            elif code == next_code:
-                entry = prev + prev[:1]
-                table[next_code] = entry
-                next_code += 1
-            else:
-                raise ValueError(f"corrupt TIFF LZW stream: code {code}")
-            out += entry
-            prev = entry
-            # early change, decoder side: the decoder's table is one
-            # entry BEHIND the encoder's (the first code after CLEAR
-            # creates none), so it widens at 2^size - 2 — libtiff's
-            # maxcode-1 convention — to stay in step with an encoder
-            # that widens at 2^size - 1
-            if next_code == (1 << size) - 2 and size < 12:
-                size += 1
+    out, depth = _gif_header(w, h, palette)
+    _gif_image(out, img, depth)
+    out += b"\x3b"
     return bytes(out)
 
 
@@ -1298,22 +1101,6 @@ def _decode_y4m(payload: bytes):
         "colorspace": cs,
         "n_frames": len(frames),
     }
-
-
-def decode_video(payload: bytes):
-    """Container-dispatching video decode (the video sibling of
-    ``decode_image``/``decode_audio``).  Y4M and uncompressed-DIB AVI
-    decode natively; codec-library formats (MP4/H.264, WebM/VP9,
-    compressed AVI streams, ...) raise loudly — same guarded-import
-    policy as JPEG-progressive/PIL paths."""
-    if payload[:9] == b"YUV4MPEG2":
-        return _decode_y4m(payload)
-    if payload[:4] == b"RIFF" and bytes(payload[8:12]) == b"AVI ":
-        return _decode_avi(payload)
-    raise NotImplementedError(
-        "only YUV4MPEG2 and uncompressed-DIB AVI video decode "
-        "natively; codec formats need an external library absent here"
-    )
 
 
 _TGA_FOOTER_SIG = b"TRUEVISION-XFILE.\x00"
@@ -1972,51 +1759,6 @@ def _decode_ico(payload: bytes):
 # -- Animated GIF (GIF89a GCE + NETSCAPE loop) -------------------------------
 
 
-def _gif_lzw_encode(indices, depth: int) -> bytes:
-    """Greedy longest-match GIF LZW for a flat index iterable —
-    the same algorithm encode_gif inlines, exposed for multi-frame
-    assembly (CLEAR on 12-bit table overflow per the spec)."""
-    clear, end = 1 << depth, (1 << depth) + 1
-    table = {(i,): i for i in range(clear)}
-    next_code, size = end + 1, depth + 1
-    acc = nbits = 0
-    data = bytearray()
-
-    def put(code, sz):
-        nonlocal acc, nbits
-        acc |= code << nbits
-        nbits += sz
-        while nbits >= 8:
-            data.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-
-    put(clear, size)
-    buf = ()
-    for px in (int(v) for v in indices):
-        cand = buf + (px,)
-        if cand in table:
-            buf = cand
-            continue
-        put(table[buf], size)
-        table[cand] = next_code
-        next_code += 1
-        if next_code - 1 == (1 << size):
-            if size < 12:
-                size += 1
-            else:
-                put(clear, size)
-                table = {(i,): i for i in range(clear)}
-                next_code, size = end + 1, depth + 1
-        buf = (px,)
-    if buf:
-        put(table[buf], size)
-    put(end, size)
-    if nbits:
-        data.append(acc & 0xFF)
-    return bytes(data)
-
-
 def encode_gif_animation(
     frames, palette, delays_cs=None, transparent_index=None, loops=0
 ) -> bytes:
@@ -2032,14 +1774,8 @@ def encode_gif_animation(
 
     frames = [np.asarray(f) for f in frames]
     h, w = frames[0].shape
-    n = len(palette)
-    depth = max(2, (n - 1).bit_length())
     delays = delays_cs or [10] * len(frames)
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HHBBB", w, h, 0x80 | (depth - 1), 0, 0)
-    full = list(palette) + [(0, 0, 0)] * ((1 << depth) - n)
-    for rgb in full:
-        out += bytes(rgb)
+    out, depth = _gif_header(w, h, palette)
     # NETSCAPE2.0 application extension: loop count
     out += b"\x21\xff\x0bNETSCAPE2.0\x03\x01" + struct.pack(
         "<H", loops
@@ -2055,13 +1791,7 @@ def encode_gif_animation(
         out += b"\x21\xf9\x04" + bytes([flags]) + struct.pack(
             "<H", delay
         ) + bytes([tidx, 0])
-        out += b"\x2c" + struct.pack("<HHHHB", 0, 0, w, h, 0)
-        out += bytes([depth])
-        data = _gif_lzw_encode(f.reshape(-1), depth)
-        for i in range(0, len(data), 255):
-            chunk = data[i : i + 255]
-            out += bytes([len(chunk)]) + bytes(chunk)
-        out += b"\x00"
+        _gif_image(out, f, depth)
     out += b"\x3b"
     return bytes(out)
 
@@ -2079,16 +1809,7 @@ def decode_gif_frames(payload: bytes):
 
     import numpy as np
 
-    b = bytes(payload)
-    if b[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError("not a GIF")
-    sw, sh, flags, bg, _aspect = struct.unpack_from("<HHBBB", b, 6)
-    pos = 13
-    gct = None
-    if flags & 0x80:
-        n = 3 * (2 << (flags & 0x07))
-        gct = np.frombuffer(b, np.uint8, n, pos).reshape(-1, 3)
-        pos += n
+    sw, sh, bg, gct, blocks = _gif_blocks(bytes(payload))
     canvas = np.zeros((sh, sw), np.int64)
     if gct is not None:
         canvas[:] = bg
@@ -2098,18 +1819,9 @@ def decode_gif_frames(payload: bytes):
     delay = 0
     transparent = None
     disposal = 0
-    while pos < len(b):
-        block = b[pos]
-        pos += 1
+    for block, body in blocks:
         if block == 0x21:
-            label = b[pos]
-            pos += 1
-            subs = []
-            while b[pos]:
-                ln = b[pos]
-                subs.append(b[pos + 1 : pos + 1 + ln])
-                pos += 1 + ln
-            pos += 1
+            label, subs = body
             if label == 0xF9 and subs:
                 gflags = subs[0][0]
                 delay = struct.unpack("<H", subs[0][1:3])[0]
@@ -2123,42 +1835,9 @@ def decode_gif_frames(payload: bytes):
             elif label == 0xFF and subs and subs[0][:11] == b"NETSCAPE2.0":
                 if len(subs) > 1 and len(subs[1]) >= 3:
                     loops = struct.unpack("<H", subs[1][1:3])[0]
-        elif block == 0x2C:
-            lx, ty, w, h, iflags = struct.unpack_from("<HHHHB", b, pos)
-            pos += 9
-            table = gct
-            if iflags & 0x80:
-                n = 3 * (2 << (iflags & 0x07))
-                table = np.frombuffer(b, np.uint8, n, pos).reshape(-1, 3)
-                pos += n
-            if table is None:
-                raise ValueError("GIF image without a color table")
-            min_code = b[pos]
-            pos += 1
-            if not 2 <= min_code <= 8:
-                raise ValueError(
-                    f"invalid GIF LZW code size {min_code}"
-                )
-            chunks = []
-            while b[pos]:
-                ln = b[pos]
-                chunks.append(b[pos + 1 : pos + 1 + ln])
-                pos += 1 + ln
-            pos += 1
-            idx = _lzw_decode(b"".join(chunks), min_code)
-            if len(idx) < w * h:
-                raise ValueError("GIF pixel data truncated")
-            arr = np.asarray(idx[: w * h], dtype=np.int64).reshape(h, w)
-            if iflags & 0x40:
-                order = (
-                    list(range(0, h, 8))
-                    + list(range(4, h, 8))
-                    + list(range(2, h, 4))
-                    + list(range(1, h, 2))
-                )
-                deinter = np.empty_like(arr)
-                deinter[order] = arr
-                arr = deinter
+        else:
+            lx, ty, arr, table = body
+            h, w = arr.shape
             region = canvas[ty : ty + h, lx : lx + w]
             if transparent is not None:
                 region[:] = np.where(arr == transparent, region, arr)
@@ -2169,10 +1848,6 @@ def decode_gif_frames(payload: bytes):
             if disposal == 2:
                 canvas[ty : ty + h, lx : lx + w] = bg
             delay, transparent, disposal = 0, None, 0
-        elif block == 0x3B:
-            break
-        else:
-            raise ValueError(f"unknown GIF block 0x{block:02x}")
     if not frames:
         raise ValueError("GIF contains no image data")
     return frames, {
@@ -2182,6 +1857,85 @@ def decode_gif_frames(payload: bytes):
         "delays_cs": delays,
         "loops": loops,
     }
+
+
+# ---------------------------------------------------------------------------
+# Format dispatch: one table of (magic test, decoder) pairs per media
+# kind, tried in order.  Every test reads the payload by slice, so a
+# short or empty payload matches nothing instead of raising IndexError
+# (zero-length event data is legal flo).
+# ---------------------------------------------------------------------------
+
+_FORMATS = {
+    "image": (
+        (lambda b: b[:2] in (b"P6", b"P5"), _decode_ppm),
+        (lambda b: b[:2] == b"BM", _decode_bmp),
+        (lambda b: b[:8] == _PNG_SIG, _decode_png),
+        (lambda b: b[:4] in (b"II*\x00", b"MM\x00*"), _decode_tiff),
+        (lambda b: b[:6] in (b"GIF87a", b"GIF89a"), _decode_gif),
+        (lambda b: b[:4] == b"qoif", _decode_qoi),
+        (lambda b: b[:2] == b"\xff\xd8", decode_jpeg),
+        (lambda b: b[:4] == b"\x00\x00\x01\x00", _decode_ico),
+        (lambda b: b[:4] == b"RIFF" and b[8:12] == b"WEBP", decode_webp),
+        (lambda b: b[:4] == b"\x59\xa6\x6a\x95", _decode_ras),
+        (
+            lambda b: b[:1] == b"\x0a"
+            and b[2:3] == b"\x01"
+            and b[3:4] in (b"\x01", b"\x02", b"\x04", b"\x08"),
+            _decode_pcx,
+        ),
+        # TGA has no leading magic; the 2.0 footer is its only reliable
+        # signature (encode_tga always writes it)
+        (lambda b: b[-18:] == _TGA_FOOTER_SIG, _decode_tga),
+    ),
+    "audio": (
+        (lambda b: b[:4] == b"RIFF" and b[8:12] == b"WAVE", _decode_wav),
+        (lambda b: b[:4] == b".snd", _decode_au),
+        (lambda b: b[:4] == b"FORM" and b[8:12] == b"AIFF", _decode_aiff),
+        (lambda b: b[:4] == b"fLaC", _decode_flac_norm),
+    ),
+    "video": (
+        (lambda b: b[:9] == b"YUV4MPEG2", _decode_y4m),
+        (lambda b: b[:4] == b"RIFF" and b[8:12] == b"AVI ", _decode_avi),
+    ),
+}
+
+
+def _sniff_decode(kind: str, payload: bytes):
+    b = bytes(payload)
+    for matches, decode in _FORMATS[kind]:
+        if matches(b):
+            return decode(b)
+    raise NotImplementedError(
+        f"no native {kind} decoder recognizes this payload"
+    )
+
+
+def decode_image(payload: bytes):
+    """Decode an image payload to an (H, W, C) uint8 numpy array with
+    the native decoders: binary PPM/PGM, 24-bit BMP, 8-bit PNG (incl.
+    Adam7), TIFF (incl. LZW), GIF, QOI, baseline JPEG, ICO, lossless
+    WebP, Sun Raster, PCX and TGA.  An unrecognized payload, or a
+    variant a decoder does not implement, raises
+    NotImplementedError."""
+    return _sniff_decode("image", payload)
+
+
+def decode_audio(payload: bytes):
+    """Decode an audio payload to (samples: float32 ndarray in [-1, 1]
+    of shape (frames, channels), rate: int) with the native decoders:
+    PCM WAV, Sun AU (incl. G.711 mu-law), AIFF and FLAC.  An
+    unrecognized payload, or a variant a decoder does not implement,
+    raises NotImplementedError."""
+    return _sniff_decode("audio", payload)
+
+
+def decode_video(payload: bytes):
+    """Decode a video payload to (frames, meta) — the video sibling of
+    ``decode_image``/``decode_audio``.  Y4M and uncompressed-DIB AVI
+    decode natively; codec formats (MP4/H.264, WebM/VP9, compressed
+    AVI streams, ...) raise NotImplementedError."""
+    return _sniff_decode("video", payload)
 
 
 # ---------------------------------------------------------------------------

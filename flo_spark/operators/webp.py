@@ -20,127 +20,58 @@ Scope (mirrors the other native codecs' honesty contract):
   normal path is exercised by every round trip).
 
 Bit order: VP8L packs values LSB-first into bytes; canonical prefix
-codes are traversed MSB-of-code-first, one stream bit per code bit.
+codes are traversed MSB-of-code-first, one stream bit per code bit
+(the LSB-first bit I/O and prefix codes of operators/bitio.py).
 """
 
 from __future__ import annotations
 
-
-class _BitReader:
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0  # bit position
-
-    def bit(self) -> int:
-        i = self.pos
-        if i >> 3 >= len(self.data):
-            raise ValueError("VP8L bitstream truncated")
-        self.pos = i + 1
-        return (self.data[i >> 3] >> (i & 7)) & 1
-
-    def bits(self, n: int) -> int:
-        v = 0
-        for k in range(n):
-            v |= self.bit() << k
-        return v
+from flo_spark.operators.bitio import (
+    LsbReader,
+    LsbWriter,
+    PrefixDecoder,
+    canonical_codes,
+    canonical_counts,
+)
 
 
-class _BitWriter:
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.nacc = 0
+class _OneSymbol:
+    """A prefix code with a single used symbol, which VP8L codes in
+    zero bits."""
 
-    def write(self, value: int, n: int) -> None:
-        self.acc |= (value & ((1 << n) - 1)) << self.nacc
-        self.nacc += n
-        while self.nacc >= 8:
-            self.out.append(self.acc & 0xFF)
-            self.acc >>= 8
-            self.nacc -= 8
+    def __init__(self, sym: int):
+        self.sym = sym
 
-    def write_code(self, code: int, length: int) -> None:
-        # canonical prefix code: MSB of the code goes first
-        for k in range(length - 1, -1, -1):
-            self.write((code >> k) & 1, 1)
-
-    def bytes(self) -> bytes:
-        if self.nacc:
-            self.out.append(self.acc & 0xFF)
-            self.acc, self.nacc = 0, 0
-        return bytes(self.out)
+    def read(self, br: LsbReader) -> int:
+        return self.sym
 
 
-def _canonical_codes(lengths: dict[int, int]) -> dict[int, tuple[int, int]]:
-    """symbol -> (code, length), RFC1951 canonical assignment."""
-    by_len: dict[int, list[int]] = {}
-    for sym, ln in lengths.items():
-        if ln > 0:
-            by_len.setdefault(ln, []).append(sym)
-    code = 0
-    out: dict[int, tuple[int, int]] = {}
-    for ln in range(1, max(by_len) + 1 if by_len else 1):
-        for sym in sorted(by_len.get(ln, [])):
-            out[sym] = (code, ln)
-            code += 1
-        code <<= 1
-    return out
-
-
-class _PrefixDecoder:
-    def __init__(self, lengths: dict[int, int]):
-        nz = {s: l for s, l in lengths.items() if l > 0}
-        if len(nz) == 1:
-            # single-symbol code: zero bits per symbol
-            self.single = next(iter(nz))
-            self.table = None
-            return
-        self.single = None
-        codes = _canonical_codes(nz)
-        self.table = {(ln, code): sym for sym, (code, ln) in codes.items()}
-        self.max_len = max(l for _, l in codes.values())
-
-    def read(self, br: _BitReader) -> int:
-        if self.single is not None:
-            return self.single
-        code, ln = 0, 0
-        while True:
-            code = (code << 1) | br.bit()
-            ln += 1
-            sym = self.table.get((ln, code))
-            if sym is not None:
-                return sym
-            if ln > self.max_len:
-                raise ValueError("invalid VP8L prefix code")
+def _prefix_decoder(lengths: dict[int, int]):
+    used = {s: ln for s, ln in lengths.items() if ln}
+    if len(used) == 1:
+        return _OneSymbol(next(iter(used)))
+    return PrefixDecoder(*canonical_counts(used))
 
 
 _CLC_ORDER = [17, 18, 0, 1, 2, 3, 4, 5, 16, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15]
 
 
-def _read_prefix_code(br: _BitReader, alphabet_size: int) -> _PrefixDecoder:
-    if br.bit():  # simple code
-        num_symbols = br.bit() + 1
-        first_8 = br.bit()
-        s0 = br.bits(8 if first_8 else 1)
+def _read_prefix_code(br: LsbReader, alphabet_size: int):
+    if br.read(1):  # simple code
+        num_symbols = br.read(1) + 1
+        first_8 = br.read(1)
+        s0 = br.read(8 if first_8 else 1)
         if num_symbols == 2:
-            s1 = br.bits(8)
             # spec: bit 0 is the FIRST symbol in stream order, not the
             # numerically smaller one — bypass canonical assignment.
-            dec = _PrefixDecoder({s0: 1})
-            dec.single = None
-            dec.table = {(1, 0): s0, (1, 1): s1}
-            dec.max_len = 1
-            return dec
-        return _PrefixDecoder({s0: 1})  # zero bits per symbol
+            return PrefixDecoder([2], [s0, br.read(8)])
+        return _OneSymbol(s0)  # zero bits per symbol
     # normal: code lengths coded by the code-length code
-    num_clc = 4 + br.bits(4)
-    clc_lengths = {}
-    for i in range(num_clc):
-        clc_lengths[_CLC_ORDER[i]] = br.bits(3)
-    clc = _PrefixDecoder({s: l for s, l in clc_lengths.items() if l})
-    if br.bit():  # use max_symbol
-        length_nbits = 2 + 2 * br.bits(3)
-        max_symbol = 2 + br.bits(length_nbits)
+    num_clc = 4 + br.read(4)
+    clc = _prefix_decoder({_CLC_ORDER[i]: br.read(3) for i in range(num_clc)})
+    if br.read(1):  # use max_symbol
+        length_nbits = 2 + 2 * br.read(3)
+        max_symbol = 2 + br.read(length_nbits)
     else:
         max_symbol = alphabet_size
     lengths: dict[int, int] = {}
@@ -155,15 +86,15 @@ def _read_prefix_code(br: _BitReader, alphabet_size: int) -> _PrefixDecoder:
             if code:
                 prev_len = code
         elif code == 16:
-            for _ in range(3 + br.bits(2)):
+            for _ in range(3 + br.read(2)):
                 if sym < alphabet_size:
                     lengths[sym] = prev_len
                     sym += 1
         elif code == 17:
-            sym += 3 + br.bits(3)
+            sym += 3 + br.read(3)
         else:  # 18
-            sym += 11 + br.bits(7)
-    return _PrefixDecoder({s: l for s, l in lengths.items() if l})
+            sym += 11 + br.read(7)
+    return _prefix_decoder(lengths)
 
 
 def _lz77_extra(prefix: int) -> tuple[int, int]:
@@ -203,15 +134,14 @@ def decode_webp(payload: bytes):
         raise ValueError("WebP file has no VP8L chunk")
     if vp8l[0] != 0x2F:
         raise ValueError("bad VP8L signature byte")
-    br = _BitReader(vp8l)
-    br.pos = 8
-    w = br.bits(14) + 1
-    h = br.bits(14) + 1
-    br.bit()  # alpha hint
-    if br.bits(3) != 0:
+    br = LsbReader(vp8l, 1)
+    w = br.read(14) + 1
+    h = br.read(14) + 1
+    br.read(1)  # alpha hint
+    if br.read(3) != 0:
         raise ValueError("unknown VP8L version")
-    while br.bit():
-        ttype = br.bits(2)
+    while br.read(1):
+        ttype = br.read(2)
         names = {0: "predictor", 1: "color", 2: "subtract-green",
                  3: "color-indexing"}
         raise NotImplementedError(
@@ -220,12 +150,12 @@ def decode_webp(payload: bytes):
         )
     # color cache
     cache_bits = 0
-    if br.bit():
-        cache_bits = br.bits(4)
+    if br.read(1):
+        cache_bits = br.read(4)
         if not 1 <= cache_bits <= 11:
             raise ValueError("invalid color cache size")
     cache = [0] * (1 << cache_bits) if cache_bits else None
-    if br.bit():
+    if br.read(1):
         raise NotImplementedError(
             "VP8L meta-prefix (multiple code groups) not implemented"
         )
@@ -251,10 +181,10 @@ def decode_webp(payload: bytes):
                 cache[((argb * 0x1E35A7BD) & 0xFFFFFFFF) >> (32 - cache_bits)] = argb
         elif s < 256 + 24:
             eb, off = _lz77_extra(s - 256)
-            length = off + (br.bits(eb) if eb else 0)
+            length = off + br.read(eb)
             dsym = d_code.read(br)
             eb, off = _lz77_extra(dsym)
-            dist_code = off + (br.bits(eb) if eb else 0)
+            dist_code = off + br.read(eb)
             if dist_code > 120:
                 dist = dist_code - 120
             else:
@@ -286,7 +216,7 @@ def decode_webp(payload: bytes):
     return out
 
 
-def _write_simple_or_flat(bw: _BitWriter, values, alphabet_size: int):
+def _write_simple_or_flat(bw: LsbWriter, values, alphabet_size: int):
     """Emit a prefix code for the channel and return symbol->(code,len).
 
     <= 2 distinct values -> SIMPLE code; otherwise a flat 8-bit
@@ -318,7 +248,7 @@ def _write_simple_or_flat(bw: _BitWriter, values, alphabet_size: int):
     for i in range(12):
         sym = _CLC_ORDER[i]
         bw.write(clc_lengths.get(sym, 0), 3)
-    clc_codes = _canonical_codes(clc_lengths)
+    clc_codes = canonical_codes(*canonical_counts(clc_lengths))
     if alphabet_size > 256:
         # max_symbol counts code-length-code SYMBOLS READ (libwebp
         # ReadHuffmanCodeLengths), not filled slots: we emit exactly
@@ -363,7 +293,7 @@ def encode_webp_lossless(img) -> bytes:
     else:
         rgba = img
         alpha_hint = 1
-    bw = _BitWriter()
+    bw = LsbWriter()
     bw.write(0x2F, 8)
     bw.write(w - 1, 14)
     bw.write(h - 1, 14)
@@ -394,7 +324,7 @@ def encode_webp_lossless(img) -> bytes:
         bw.write_code(c, ln)
         c, ln = a_codes[int(a[i])]
         bw.write_code(c, ln)
-    vp8l = bw.bytes()
+    vp8l = bw.getvalue()
     chunk = b"VP8L" + struct.pack("<I", len(vp8l)) + vp8l
     if len(vp8l) % 2:
         chunk += b"\x00"

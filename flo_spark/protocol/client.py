@@ -158,13 +158,10 @@ class FloClient:
             }
         op = self._next_op()
         vv = [wire.EventId(c, p) for p, c in sorted(version_vector.items())]
-        self._send(wire.NewStartConsuming(op, vv, max_events, namespace))
-        first = self._recv()
-        if isinstance(first, wire.ErrorMessage):
-            raise FloProtocolError(first)
-        if not isinstance(first, wire.CursorCreated):
-            raise RuntimeError(f"expected CursorCreated, got {first!r}")
-        self.cursor = first
+        self.cursor = self._rpc(
+            wire.NewStartConsuming(op, vv, max_events, namespace),
+            wire.CursorCreated,
+        )
 
         def events():
             delivered = 0

@@ -125,13 +125,14 @@ def test_multimodal_feature_extraction(spark, corpus):
 
 
 def test_multimodal_decode_stubs_raise():
-    # no codec libs in this container: the guarded optional imports
-    # must surface as NotImplementedError (where PIL/soundfile exist,
-    # these decode for real)
+    # payloads no native decoder recognizes raise NotImplementedError;
+    # the short ones (zero-length flo data is legal) must not reach an
+    # unchecked index in a magic test
     from flo_spark.operators.multimodal import decode_audio, decode_image
 
-    with pytest.raises(NotImplementedError):
-        decode_image(b"not-an-image")
+    for payload in (b"not-an-image", b"", b"\x0a", b"\x0a\x05"):
+        with pytest.raises(NotImplementedError):
+            decode_image(payload)
     with pytest.raises(NotImplementedError):
         decode_audio(b"not-audio")
 

@@ -10,6 +10,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from flo_spark.operators.bitio import MsbWriter
 from flo_spark.operators import flac as fl
 from flo_spark.operators.flac import decode_flac, encode_flac
 
@@ -117,7 +118,7 @@ def test_not_flac_rejected():
 
 
 def _stream(frames: bytes, n, n_ch, bps=16, rate=8000, md5=b"\0" * 16):
-    si = fl._BitWriter()
+    si = MsbWriter()
     si.write(4096, 16)
     si.write(4096, 16)
     si.write(0, 24)
@@ -126,13 +127,12 @@ def _stream(frames: bytes, n, n_ch, bps=16, rate=8000, md5=b"\0" * 16):
     si.write(n_ch - 1, 3)
     si.write(bps - 1, 5)
     si.write(n, 36)
-    si.align()
     body = si.getvalue() + md5
     return b"fLaC" + bytes([0x80, 0, 0, len(body)]) + body + frames
 
 
 def _frame(bs, ch_code, write_subframes):
-    bw = fl._BitWriter()
+    bw = MsbWriter()
     bw.write(fl._SYNC, 14)
     bw.write(0, 1)
     bw.write(0, 1)
@@ -145,7 +145,6 @@ def _frame(bs, ch_code, write_subframes):
     bw.write(bs - 1, 16)
     bw.write(fl._crc8(bytes(bw.buf)), 8)
     write_subframes(bw)
-    bw.align()
     body = bw.getvalue()
     return body + struct.pack(">H", fl._crc16(body))
 

@@ -8,6 +8,7 @@ import struct
 import numpy as np
 import pytest
 
+from flo_spark.operators.bitio import MsbWriter, canonical_codes
 from flo_spark.operators import jpeg as J
 from flo_spark.operators.jpeg import decode_jpeg, encode_jpeg_baseline
 
@@ -83,9 +84,9 @@ def test_handbuilt_single_block_coefficients():
     """Bypass the encoder's DCT: hand-code a block with known DC and
     one AC coefficient, decode, and match the float IDCT reference."""
     qtab = J._quality_scale(J._Q_LUM, 50)
-    dc_codes = J._build_huff_codes(*J._DC_LUM)
-    ac_codes = J._build_huff_codes(*J._AC_LUM)
-    bw = J._JBitWriter()
+    dc_codes = canonical_codes(*J._DC_LUM)
+    ac_codes = canonical_codes(*J._AC_LUM)
+    bw = MsbWriter()
     # DC = +5 (size 3), then AC at zigzag 1 = -3 (run 0, size 2), EOB
     s, bits = J._magnitude(5)
     c, ln = dc_codes[s]
@@ -97,7 +98,6 @@ def test_handbuilt_single_block_coefficients():
     bw.write(bits, s)
     c, ln = ac_codes[0x00]
     bw.write(c, ln)
-    bw.pad_to_byte()
 
     head = bytearray(b"\xff\xd8")
     head += b"\xff\xdb" + struct.pack(">HB", 67, 0)
@@ -108,7 +108,7 @@ def test_handbuilt_single_block_coefficients():
         head += b"\xff\xc4" + struct.pack(">HB", 19 + len(v_), tid)
         head += bytes(b_) + bytes(v_)
     head += b"\xff\xda" + struct.pack(">HB", 8, 1) + bytes([1, 0x00, 0, 63, 0])
-    buf = bytes(head) + bytes(bw.out) + b"\xff\xd9"
+    buf = bytes(head) + J._entropy_bytes(bw) + b"\xff\xd9"
 
     dec = decode_jpeg(buf)[:, :, 0].astype(np.float64)
     coef = np.zeros(64)

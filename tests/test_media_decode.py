@@ -4,9 +4,8 @@ Synthesizes PCM WAV, binary PPM/PGM, 24-bit BMP, and 8-bit PNG
 payloads with stdlib only, then verifies decode_image/decode_audio
 recover the exact samples/pixels — locally and distributed through
 mapInPandas (the binary column + Arrow batch path the engine uses for
-multimodal assets).  Formats needing codec libraries (JPEG/...) stay
-behind guarded PIL/soundfile imports and must raise
-NotImplementedError in this container.
+multimodal assets).  Variants with no native decoder (progressive
+JPEG, ...) must raise NotImplementedError.
 """
 
 import io
@@ -250,10 +249,10 @@ def test_netpbm_16bit_decodes_exact_samples():
 
 
 def test_codec_lib_formats_raise_without_codec_libs():
-    # BASELINE JPEG now decodes natively (operators/jpeg.py); the
-    # codec-lib-gated class is PROGRESSIVE JPEG (SOF2) — the
-    # guarded-import fallback must raise NotImplementedError exactly
-    # (ADVICE r4: a broad exception class would mask header-parse bugs)
+    # BASELINE JPEG decodes natively (operators/jpeg.py); PROGRESSIVE
+    # JPEG (SOF2) has no native decoder and must raise
+    # NotImplementedError exactly (ADVICE r4: a broad exception class
+    # would mask header-parse bugs)
     import struct
 
     progressive = (
@@ -263,11 +262,8 @@ def test_codec_lib_formats_raise_without_codec_libs():
         + struct.pack(">BHHB", 8, 8, 8, 1)
         + bytes([1, 0x11, 0])
     )
-    try:
-        import PIL  # noqa: F401  # pragma: no cover
-    except ImportError:
-        with pytest.raises(NotImplementedError):
-            decode_image(progressive)
+    with pytest.raises(NotImplementedError):
+        decode_image(progressive)
 
 
 def test_real_decode_through_map_in_pandas(spark):
@@ -779,13 +775,12 @@ def test_gif_encoder_handles_table_overflow_and_corrupt_code_size():
 
 
 def test_wav_unsupported_width_reaches_soundfile_fallback_contract():
-    """A 24-bit WAV must fall through toward the soundfile path (absent
-    here, so the NotImplementedError mentions it) instead of
-    dead-ending in the native WAV branch."""
+    """A 24-bit WAV has no native decoder: it must raise
+    NotImplementedError naming the sample width, not mis-decode."""
     buf = io.BytesIO()
     with wave.open(buf, "wb") as wf:
         wf.setnchannels(1)
-        wf.setsampwidth(3)  # 24-bit: native path can't, soundfile could
+        wf.setsampwidth(3)  # 24-bit: no native decoder
         wf.setframerate(8000)
         wf.writeframes(b"\x00\x01\x02" * 8)
     with pytest.raises(NotImplementedError, match="WAV sample width 3"):
@@ -1253,11 +1248,14 @@ def test_pcx_ras_property_random_images(seed):
 # WebP lossless (VP8L)
 # ---------------------------------------------------------------------------
 
-from flo_spark.operators.webp import (
-    _BitWriter as _VP8LBitWriter,
+from flo_spark.operators.bitio import (
+    LsbWriter as _VP8LBitWriter,
+)
+from flo_spark.operators.bitio import (
+    canonical_codes,
+    canonical_counts,
 )
 from flo_spark.operators.webp import (
-    _canonical_codes,
     decode_webp,
     encode_webp_lossless,
 )
@@ -1284,7 +1282,7 @@ def _emit_lengths(bw, lengths, alphabet_size):
     clc_lens = {18: 2, 0: 2, 1: 1}
     for sym in [17, 18, 0, 1, 2, 3, 4, 5, 16, 6, 7, 8]:
         bw.write(clc_lens.get(sym, 0), 3)
-    codes = _canonical_codes(clc_lens)
+    codes = canonical_codes(*canonical_counts(clc_lens))
     bw.write(0, 1)  # no max_symbol shortcut
     sym = 0
     want = sorted(lengths)
@@ -1369,7 +1367,7 @@ def test_webp_simple_code_stream_order_not_canonical():
     _simple_single(bw, 0)  # distance (unused)
     bw.write_code(0, 1)  # green code 0 -> s0 = 9
     bw.write_code(1, 1)  # green code 1 -> s1 = 3
-    dec = decode_webp(_vp8l_file(bw.bytes()))
+    dec = decode_webp(_vp8l_file(bw.getvalue()))
     exp = np.array([[[0, 9, 0, 255], [0, 3, 0, 255]]], np.uint8)
     assert np.array_equal(dec, exp)
 
@@ -1397,7 +1395,7 @@ def test_webp_hand_built_backref_stream():
     bw.write_code(0, 1)  # green literal 0 (code 0)
     bw.write_code(1, 1)  # green symbol 256 -> length prefix 0 (len 1)
     bw.write(24, 5)  # distance extra: 97 + 24 = 121 -> dist 1
-    dec = decode_webp(_vp8l_file(bw.bytes()))
+    dec = decode_webp(_vp8l_file(bw.getvalue()))
     exp = np.array([[[7, 0, 9, 255], [7, 0, 9, 255]]], np.uint8)
     assert np.array_equal(dec, exp)
 
@@ -1424,7 +1422,7 @@ def test_webp_hand_built_color_cache_stream():
     _simple_single(bw, 0)  # distance (unused)
     bw.write_code(0, 1)  # green literal 0
     bw.write_code(1, 1)  # cache symbol for the planted slot
-    dec = decode_webp(_vp8l_file(bw.bytes()))
+    dec = decode_webp(_vp8l_file(bw.getvalue()))
     exp = np.array([[[7, 0, 9, 255], [7, 0, 9, 255]]], np.uint8)
     assert np.array_equal(dec, exp)
 
@@ -1439,7 +1437,7 @@ def test_webp_refusals():
     bw.write(1, 1)  # transform present
     bw.write(2, 2)  # subtract-green
     with pytest.raises(NotImplementedError, match="subtract-green"):
-        decode_webp(_vp8l_file(bw.bytes()))
+        decode_webp(_vp8l_file(bw.getvalue()))
     import struct
 
     lossy = b"RIFF" + struct.pack("<I", 12) + b"WEBP" + b"VP8 " + struct.pack("<I", 0)

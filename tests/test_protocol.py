@@ -416,6 +416,22 @@ def test_pipelined_produce_many(server):
         assert len(got) == 20
 
 
+def test_consume_skips_stale_cursor_traffic_on_reused_connection(server):
+    """Events and AwaitingEvents of a previous cursor can still be
+    queued when the next consume starts (they were in flight when its
+    StopConsuming went out); consume must skip them rather than take
+    them for the CursorCreated reply."""
+    with FloClient(server.host, server.port) as c:
+        for i in range(3):
+            c.produce(1, "/a", f"e{i}".encode())
+        c._pending[:0] = [
+            wire.ReceiveEvent(wire.EventId(9, 1), None, 0, "/old", b"stale"),
+            wire.AwaitingEvents(),
+        ]
+        got = list(c.consume(version_vector={1: 0}))
+        assert [e.data for e in got] == [b"e0", b"e1", b"e2"]
+
+
 # ---------------------------------------------------------------------------
 # property tests: random messages must round-trip bit-exactly
 # ---------------------------------------------------------------------------
