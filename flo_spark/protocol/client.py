@@ -33,6 +33,9 @@ class FloClient:
         timeout: float = 30.0,
     ):
         self._sock = socket.create_connection((host, port), timeout=timeout)
+        # one small message per request: send it now, without Nagle's
+        # wait for the previous segment's ACK
+        self._sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
         self._framer = wire.Framer()
         self._pending: list = []
         self._op = 0

@@ -594,3 +594,242 @@ def test_concurrent_producers_and_tailing_consumers(server):
                 a,
                 counters[:5],
             )
+
+
+# ---------------------------------------------------------------------------
+# the server's read path: index seek, credit-bounded pages, tail wake-up
+# ---------------------------------------------------------------------------
+
+import os
+import random
+import re
+import socket
+
+from flo_spark.functions.glob import glob_to_regex, is_match_all
+from flo_spark.protocol import server as server_mod
+from flo_spark.sources.flo_segment import (
+    decode_segment,
+    encode_segment,
+    expire_native_segments,
+    list_segment_files,
+)
+
+
+def test_tail_wakes_for_an_append_racing_its_poll(server):
+    """An event appended between a tail's poll and its wait is
+    delivered at once, not when the wait times out."""
+    stream = server.stream("default")
+    stream.produce(1, "/a", b"first", None)
+    poll = stream.events_after
+    produced_at = []
+
+    def racing_poll(*args, **kwargs):
+        out = poll(*args, **kwargs)
+        if not produced_at:  # the tail's first poll
+            stream.produce(1, "/a", b"late", None)
+            produced_at.append(time.perf_counter())
+        return out
+
+    stream.events_after = racing_poll
+    got = {}
+    with FloClient(server.host, server.port) as c:
+        for ev in c.consume(version_vector={1: 0}, await_new=True, max_events=2):
+            got[ev.data] = time.perf_counter()
+    assert list(got) == [b"first", b"late"]
+    assert got[b"late"] - produced_at[0] < 0.1
+
+
+def test_inline_produce_during_a_tail_wait_is_acked_at_once(server):
+    """A produce sent on the connection of a waiting cursor wakes the
+    cursor: it is acked at once, not when the wait times out."""
+    with FloClient(server.host, server.port) as c:
+        vv = [wire.EventId(0, 1)]
+        c._send(wire.NewStartConsuming(c._next_op(), vv, 0, "/**/*"))
+        assert isinstance(c._recv(), wire.CursorCreated)
+        assert c._recv() == wire.AwaitingEvents()
+        lags = []
+        for _ in range(3):
+            time.sleep(0.05)  # the cursor is parked in its wait
+            t0 = time.perf_counter()
+            c._send(wire.ProduceEvent(c._next_op(), 1, "/a", None, b"x"))
+            while not isinstance(c._recv(), wire.AckEvent):
+                pass
+            lags.append(time.perf_counter() - t0)
+        c.stop_consuming()
+    assert max(lags) < 0.1, lags
+
+
+def test_tcp_nodelay_on_both_ends(server, monkeypatch):
+    accepted = []
+    setup = server_mod._Handler.setup
+
+    def recording_setup(self):
+        setup(self)
+        accepted.append(self.request)
+
+    monkeypatch.setattr(server_mod._Handler, "setup", recording_setup)
+    with FloClient(server.host, server.port) as c:  # handshake: setup ran
+        assert c._sock.getsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY)
+        assert len(accepted) == 1
+        assert accepted[0].getsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY)
+
+
+@pytest.mark.parametrize("cut", [10, 50])  # record left >= / < 48 bytes
+def test_recovery_truncates_a_torn_active_tail(tmp_path, cut):
+    """A crash mid-append leaves a torn record at the end of the active
+    segment; recovery stops at the last complete record and appends
+    resume there."""
+    root = str(tmp_path / "torn")
+    with FloTcpServer(root) as srv:
+        for _ in range(5):
+            srv.stream("default").produce(1, "/t", b"x" * 20, None)  # 70B each
+    seg = os.path.join(root, "default", "p1", "0.events")
+    os.truncate(seg, os.path.getsize(seg) - cut)
+    with FloTcpServer(root) as srv:
+        stream = srv.stream("default")
+        parts = stream.status(0, "default").partitions
+        assert [(p.partition_num, p.head) for p in parts] == [(1, 4)]
+        assert stream.produce(1, "/t", b"y", None).counter == 5
+    with open(seg, "rb") as f:
+        assert [ev[0] for ev in decode_segment(f.read())] == [1, 2, 3, 4, 5]
+
+
+def test_recovery_still_rejects_a_corrupt_sealed_segment(tmp_path):
+    root = str(tmp_path / "sealed")
+    with FloTcpServer(root, max_events_per_segment=2) as srv:
+        for _ in range(5):
+            srv.stream("default").produce(1, "/t", b"x" * 20, None)
+    sealed = os.path.join(root, "default", "p1", "0.events")
+    os.truncate(sealed, os.path.getsize(sealed) - 10)
+    with pytest.raises(ValueError):
+        FloTcpServer(root, max_events_per_segment=2)
+
+
+def _reference(path, vv, rx, limit):
+    """Brute force: decode every file, filter, sort, truncate."""
+    out = []
+    for d, entries in list_segment_files(path).items():
+        part = int(os.path.basename(d)[1:])
+        if part not in vv:
+            continue
+        for _n, p in entries:
+            with open(p, "rb") as f:
+                out.extend(
+                    ev
+                    for ev in decode_segment(f.read())
+                    if ev[0] > vv[part] and (rx is None or rx.match(ev[5]))
+                )
+    out.sort(key=lambda e: (e[0], e[1]))
+    return out if limit is None else out[:limit]
+
+
+def _floors(path, part, rng):
+    """Cursor positions worth probing in one partition dir: before the
+    first event, inside and on the edges of each segment, at the head
+    and past it."""
+    d = os.path.join(path, f"p{part}")
+    counters = []
+    for _n, p in list_segment_files(d).get(d, []):
+        with open(p, "rb") as f:
+            seg = [ev[0] for ev in decode_segment(f.read())]
+        counters += seg[:1] + seg[-1:] + ([rng.choice(seg)] if seg else [])
+    head = max(counters, default=0)
+    return [0, head, head + 3] + counters + [c - 1 for c in counters]
+
+
+def _check_against_reference(stream, rng, n_queries=60):
+    parts = sorted(stream.parts)
+    for _ in range(n_queries):
+        pinned = rng.sample(parts + [97], rng.randint(1, len(parts) + 1))
+        vv = {p: rng.choice(_floors(stream.path, p, rng)) for p in pinned}
+        glob = rng.choice(["/**/*", "/a/*", "/b/**/*"])
+        rx = None if is_match_all(glob) else re.compile(glob_to_regex(glob))
+        limit = rng.choice([None, 1, rng.randint(2, 12)])
+        got = stream.events_after(dict(vv), rx, limit)
+        assert got == _reference(stream.path, vv, rx, limit), (vv, glob, limit)
+
+
+_NAMESPACES = ["/a/x", "/a/y", "/b/c/d", "/c"]
+
+
+@pytest.mark.parametrize("seed", range(6))
+def test_events_after_matches_brute_force_on_produced_dirs(
+    tmp_path, monkeypatch, seed
+):
+    rng = random.Random(seed)
+    # small read windows: one segment takes several file reads
+    monkeypatch.setattr(server_mod, "READ_CHUNK_EVENTS", rng.choice([1, 2, 1024]))
+    path = str(tmp_path / "s")
+    stream = server_mod._Stream(path, 1 << 30, rng.randint(1, 6))
+    for _ in range(rng.randint(20, 80)):
+        stream.produce(rng.randrange(4), rng.choice(_NAMESPACES), b"d", None)
+    _check_against_reference(stream, rng)
+    # the index that recovery rebuilds serves the same answers
+    _check_against_reference(server_mod._Stream(path, 1 << 30, 3), rng)
+
+
+def _write_gapped_dir(path, rng, interleave=False):
+    """Spark-style layout: one stream-wide counter spread over three
+    partition dirs, so each dir's counters have gaps.  Header end-times
+    ascend with the segment number.  ``interleave`` deals a dir's
+    events round-robin over its segments, so counters interleave
+    across files."""
+    per_part = {p: [] for p in range(3)}
+    for counter in range(1, rng.randint(40, 90)):
+        p = rng.randrange(3)
+        per_part[p].append(
+            (counter, p, None, None, 1000 + counter, rng.choice(_NAMESPACES), b"g")
+        )
+    for p, events in per_part.items():
+        d = os.path.join(path, f"p{p}")
+        os.makedirs(d)
+        n_segs = rng.randint(1, 4)
+        if interleave:
+            chunks = [events[k::n_segs] for k in range(n_segs)]
+        else:
+            size = -(-len(events) // n_segs)
+            chunks = [events[k * size : (k + 1) * size] for k in range(n_segs)]
+        for k, chunk in enumerate(chunks):
+            with open(os.path.join(d, f"{k}.events"), "wb") as f:
+                f.write(encode_segment(chunk, 0, (k + 1) * 1000))
+
+
+@pytest.mark.parametrize("seed", range(4))
+@pytest.mark.parametrize("interleave", [False, True])
+def test_events_after_matches_brute_force_on_gapped_dirs(
+    tmp_path, monkeypatch, seed, interleave
+):
+    rng = random.Random(seed)
+    monkeypatch.setattr(server_mod, "READ_CHUNK_EVENTS", rng.choice([3, 1024]))
+    path = str(tmp_path / "s")
+    _write_gapped_dir(path, rng, interleave)
+    stream = server_mod._Stream(path, 1 << 30, 4)
+    _check_against_reference(stream, rng)
+    for _ in range(10):  # appends continue past the stream-wide heads
+        stream.produce(rng.randrange(4), rng.choice(_NAMESPACES), b"p", None)
+    _check_against_reference(stream, rng)
+    # TTL expiry removes sealed segments under the running stream
+    expire_native_segments(path, retention_millis=0, now_millis=2500)
+    _check_against_reference(stream, rng)
+
+
+def test_events_after_decodes_from_the_seek_point(tmp_path, monkeypatch):
+    """A poll decodes from the cursor's position and stops at its
+    limit, instead of decoding every segment in full."""
+    stream = server_mod._Stream(str(tmp_path / "s"), 1 << 30, 64)
+    for i in range(1000):
+        stream.produce(i % 4, "/a", b"x", None)
+    decoded = [0]
+    decode = server_mod.decode_segment
+
+    def counting_decode(buf):
+        for ev in decode(buf):
+            decoded[0] += 1
+            yield ev
+
+    monkeypatch.setattr(server_mod, "decode_segment", counting_decode)
+    assert stream.events_after(stream.heads(range(4)), None, 100) == []
+    assert decoded[0] == 0
+    page = stream.events_after({p: 0 for p in range(4)}, None, 10)
+    assert [ev[0] for ev in page] == [1, 1, 1, 1, 2, 2, 2, 2, 3, 3]
+    assert decoded[0] <= 10 + 4
